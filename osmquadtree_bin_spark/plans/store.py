@@ -21,6 +21,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..footers import StoreReader
 from ..operators.pip_join import region_tiles
 from .tables import register_tables
 
@@ -32,6 +33,7 @@ class TileQueryEngine:
         self.spark = spark
         self.store_path = store_path
         self.groups = groups
+        self._store = StoreReader(spark, store_path)
 
     def pruned_tiles(self, minx: int, miny: int, maxx: int, maxy: int) -> list[int]:
         """P1 generator: tile_idx list whose buffered tile bounds intersect."""
@@ -48,7 +50,7 @@ class TileQueryEngine:
             raise ValueError("bbox too large (reference guard, geometry.go:600-602)")
         tiles = self.pruned_tiles(minx, miny, maxx, maxy)
         df = (
-            self.spark.read.parquet(self.store_path)
+            self._store.read()
             .filter(F.col("tile_idx").isin(tiles))  # → hive partition pruning
             .filter(
                 (F.col("minx") <= maxx) & (F.col("maxx") >= minx)
@@ -80,7 +82,7 @@ class TileQueryEngine:
         minx, miny, maxx, maxy = (int(v[0]) for v in qtk.bounds(np.array([req]), 0.05))
         tiles = self.pruned_tiles(minx, miny, maxx, maxy)
         return (
-            self.spark.read.parquet(self.store_path)
+            self._store.read()
             .filter(F.col("tile_idx").isin(tiles))
             .filter((F.col("qt").bitwiseAND(F.lit(31))) >= tz)
             .filter(qt_round_expr("qt", tz) == req)
@@ -105,7 +107,7 @@ class TileQueryEngine:
             else:
                 bb = (min(r["lons"]), min(r["lats"]), max(r["lons"]), max(r["lats"]))
             tiles.update(self.pruned_tiles(*(int(v) for v in bb)))
-        elements = self.spark.read.parquet(self.store_path).filter(
+        elements = self._store.read().filter(
             F.col("tile_idx").isin(sorted(tiles))
         )
         matched = pip_join(elements, regions)

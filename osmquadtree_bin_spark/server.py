@@ -116,13 +116,15 @@ class TileServer:
 
         from pyspark.sql import functions as F
 
+        from .streaming.update import LEDGER_SCHEMA
+
         with self._lock:
             n_tiles = len(self.engine.groups)
             ledger_path = os.path.join(
                 os.path.dirname(self.engine.store_path.rstrip("/")), "ledger"
             )
             try:
-                led = self.engine.spark.read.parquet(ledger_path)
+                led = self.engine.spark.read.schema(LEDGER_SCHEMA).parquet(ledger_path)
                 state = led.agg(F.max("state").alias("s")).collect()[0]["s"]
             except Exception:  # noqa: BLE001 — store without a ledger
                 state = None

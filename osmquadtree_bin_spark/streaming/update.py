@@ -12,15 +12,23 @@ Reference contract (``/root/reference/osmquadtree-update.go``):
 
 Spark shape: the tiled table is hive-partitioned parquet (Iceberg in
 production — MERGE INTO + overwrite-by-partition-filter). Each ``apply_diff``:
-  1. joins the diff against the (id → tile) assignment to find touched tiles
-     (partition pruning: only those partitions are read),
+  1. evaluates the caller's diff once (``localCheckpoint``), then joins its
+     ids against the store's (id, tile_idx) to find touched tiles — the
+     tiles the diff assigns rows to plus the tiles those ids live in now,
   2. merges newest-wins via row_number over (id) ordered by version desc,
-  3. rewrites ONLY the touched tile partitions (dynamic partition overwrite),
-  4. appends a lineage row per touched partition: (state, tile_idx, rows_in,
-     rows_out, ts) — the resumable-checkpoint contract of the north rule.
+     over a base read from the touched ``tile_idx=N`` directories only,
+  3. rewrites ONLY the touched tile partitions (dynamic partition overwrite,
+     one id-sorted file per tile) and removes the ones the merge emptied,
+  4. appends one ledger file for the state, written by the driver (pyarrow,
+     temp name + rename — no Spark job): a lineage row per touched partition
+     (state, tile_idx, rows_in, rows_out, ts), the counts from the parquet
+     footers — the resumable-checkpoint contract of the north rule. On
+     Iceberg the same record is the snapshot summary of the overwrite commit.
 
 ``resume_state`` reads the ledger to find the last applied state, so a killed
-run restarts idempotently (T1's re-fetch avoidance).
+run restarts idempotently (T1's re-fetch avoidance). It reads it once per
+``TiledStore`` and then keeps the state on the instance: one writer per
+store.
 """
 
 from __future__ import annotations
@@ -29,6 +37,8 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+
+from ..footers import StoreReader
 
 LEDGER_SCHEMA = (
     "state long, tile_idx long, rows_in long, rows_out long, applied_at long, "
@@ -74,13 +84,19 @@ def merge_newest(base: DataFrame, diff: DataFrame, version_col: str = "version")
 
 
 class TiledStore:
-    """A tiled element table + its state/lineage ledger on disk."""
+    """A tiled element table + its state/lineage ledger on disk.
+
+    One writer per store: the last applied state is read from the ledger
+    once per instance and then kept here, so two instances applying diffs to
+    the same root at the same time would not see each other's states."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
         self.data_path = os.path.join(root, "tiles")
         self.ledger_path = os.path.join(root, "ledger")
+        self._tiles = StoreReader(spark, self.data_path)
+        self._state: int | None = None
 
     # ------------------------------------------------------------- bootstrap
     def write_initial(self, assigned: DataFrame) -> None:
@@ -95,21 +111,27 @@ class TiledStore:
             .partitionBy("tile_idx")
             .parquet(self.data_path)
         )
+        self._tiles.reset()
 
     def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.data_path)
+        return self._tiles.read()
 
     # --------------------------------------------------------------- ledger
     def ledger(self) -> DataFrame:
-        try:
-            return self.spark.read.parquet(self.ledger_path)
-        except Exception:  # noqa: BLE001 — first run: empty ledger
+        if not os.path.isdir(self.ledger_path):  # first run: empty ledger
             return self.spark.createDataFrame([], LEDGER_SCHEMA)
+        return self.spark.read.schema(LEDGER_SCHEMA).parquet(self.ledger_path)
 
     def resume_state(self) -> int:
-        """Last fully-applied state (S7 re-fetch avoidance); 0 if none."""
-        row = self.ledger().agg(F.max("state").alias("s")).collect()[0]
-        return int(row["s"]) if row["s"] is not None else 0
+        """Last fully-applied state (S7 re-fetch avoidance); 0 if none. The
+        ledger is read on the first call only; ``_append_ledger`` keeps the
+        cached value current without reading it."""
+        if self._state is None:
+            s = None
+            if os.path.isdir(self.ledger_path):
+                s = self.ledger().agg(F.max("state")).collect()[0][0]
+            self._state = int(s) if s is not None else 0
+        return self._state
 
     # ----------------------------------------------------------- apply diff
     def apply_diff(self, diff: DataFrame, state: int, version_col: str = "version") -> list[int]:
@@ -121,64 +143,60 @@ class TiledStore:
         if self.resume_state() >= state:
             return []
 
+        # Evaluate the caller's diff once: the touched-tile lookup and the
+        # merge both read it, and a diff derived from this store must not be
+        # re-read after the write below replaces its partitions.
+        diff = diff.localCheckpoint()
+
         # Touched = tiles the diff assigns rows to, PLUS the tiles the same
         # ids currently live in (the reference resolves old tiles via its
         # locations cache, CalcUpdateTiles): a moved element must vanish from
         # its previous partition and a delete must clear the row where it
         # actually is, not where the assigner would now place it. Parquet
-        # column pruning makes the old-tile lookup an (id, tile_idx)-only scan.
-        new_tiles = diff.select("tile_idx").distinct()
+        # column pruning makes the old-tile lookup an (id, tile_idx)-only
+        # scan against the broadcast diff ids (a diff is small next to the
+        # store); both sides come back as one diff-sized collect.
         old_tiles = (
             self.read()
-            .join(diff.select("id").distinct(), "id", "left_semi")
+            .join(F.broadcast(diff.select("id")), "id", "left_semi")
             .select("tile_idx")
-            .distinct()
         )
-        touched = [
-            r["tile_idx"]
-            for r in new_tiles.unionByName(old_tiles).distinct().collect()
-        ]
+        touched = sorted(
+            {r[0] for r in diff.select("tile_idx").unionByName(old_tiles).collect()}
+        )
         if not touched:
             self._append_ledger([], state, {}, {})
             return []
 
-        base = self.read().filter(F.col("tile_idx").isin(touched))
         rows_in = self._touched_counts(touched)
-
+        base = self._tiles.read(touched)  # lists the touched directories only
         newest = merge_newest(base, diff, version_col)  # T5: deletes drop
-
-        # materialize BEFORE the overwrite: newest reads the very partitions
-        # the write below replaces, so a lazy re-evaluation would see them
-        newest = newest.persist()
-        try:
-            out_tiles = {
-                r["tile_idx"] for r in newest.select("tile_idx").distinct().collect()
-            }
-            # dynamic partition overwrite: only the touched tiles are
-            # rewritten. Scoped to THIS write via the DataFrameWriter option —
-            # a session-level conf.set here would leak "dynamic" into every
-            # later partitioned overwrite (no top-level _SUCCESS, stale
-            # partitions surviving a same-session re-tile).
-            from ..tuning import shuffle_partitions_for
-
-            (
-                newest.repartition(shuffle_partitions_for(newest), F.col("tile_idx"))
-                .sortWithinPartitions("tile_idx", "id")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("tile_idx")
-                .parquet(self.data_path)
-            )
-        finally:
-            newest.unpersist()
+        before = {t: self._tile_files(t) for t in touched}
+        # Dynamic partition overwrite: only the touched tiles are rewritten,
+        # and the base partitions are read before the job commits, so the
+        # merge needs no materialized copy. Scoped to THIS write via the
+        # DataFrameWriter option — a session-level conf.set here would leak
+        # "dynamic" into every later partitioned overwrite (no top-level
+        # _SUCCESS, stale partitions surviving a same-session re-tile). One
+        # hash partition per touched tile at most: one id-sorted file per tile.
+        (
+            newest.repartition(len(touched), F.col("tile_idx"))
+            .sortWithinPartitions("tile_idx", "id")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("tile_idx")
+            .parquet(self.data_path)
+        )
         # Dynamic overwrite only replaces partitions PRESENT in the output: a
         # touched tile whose rows were all deleted emits nothing and its stale
-        # partition would survive. Clear those explicitly. (On Iceberg this is
-        # a single overwrite-by-partition-filter / MERGE and needs no FS ops.)
-        self._drop_partitions([t for t in touched if t not in out_tiles])
+        # partition would survive. A written tile holds files named after
+        # this write's job, so a touched tile whose file set is unchanged got
+        # no rows: clear it. (On Iceberg this is a single
+        # overwrite-by-partition-filter / MERGE and needs no FS ops.)
+        self._drop_partitions([t for t in touched if self._tile_files(t) == before[t]])
         rows_out = self._touched_counts(touched)
         self._append_ledger(touched, state, rows_in, rows_out)
-        return sorted(touched)
+        return touched
 
     def _touched_counts(self, touched: list[int]) -> dict[int, int]:
         """Per-tile row counts for the touched partitions. Footer-walk fast
@@ -201,6 +219,10 @@ class TiledStore:
             .collect()
         }
 
+    def _tile_files(self, tile: int) -> set[str]:
+        p = os.path.join(self.data_path, f"tile_idx={tile}")
+        return set(os.listdir(p)) if os.path.isdir(p) else set()
+
     def _drop_partitions(self, tiles: list[int]) -> None:
         """Remove now-empty tile partitions from the hive layout."""
         import shutil
@@ -211,14 +233,31 @@ class TiledStore:
                 shutil.rmtree(p)
 
     def _append_ledger(self, touched: list[int], state: int, rows_in: dict, rows_out: dict):
-        now = int(time.time())
-        rows = [
-            (state, int(t), int(rows_in.get(t, 0)), int(rows_out.get(t, 0)), now, True)
-            for t in touched
-        ] or [(state, -1, 0, 0, now, True)]
-        self.spark.createDataFrame(rows, LEDGER_SCHEMA).write.mode("append").parquet(
-            self.ledger_path
+        """One parquet file per state, written by the driver (no Spark job):
+        a temp file renamed into place, so a crashed append leaves only a
+        dot-file every reader skips, never a half-written state."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        tiles = [int(t) for t in touched] or [-1]
+        n = len(tiles)
+        table = pa.table(
+            {
+                "state": pa.array([state] * n, pa.int64()),
+                "tile_idx": pa.array(tiles, pa.int64()),
+                "rows_in": pa.array([int(rows_in.get(t, 0)) for t in tiles], pa.int64()),
+                "rows_out": pa.array([int(rows_out.get(t, 0)) for t in tiles], pa.int64()),
+                "applied_at": pa.array([int(time.time())] * n, pa.int64()),
+                "span_digest_ok": pa.array([True] * n, pa.bool_()),
+            }
         )
+        os.makedirs(self.ledger_path, exist_ok=True)
+        name = f"state-{state:012d}.parquet"
+        tmp = os.path.join(self.ledger_path, f".{name}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(self.ledger_path, name))
+        if self._state is not None:  # else the first resume_state reads it
+            self._state = max(self._state, state)
 
     # -------------------------------------------------- overflow monitoring
     def overflow_pressure(self, overflow_idx: int) -> dict:

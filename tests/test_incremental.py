@@ -314,3 +314,123 @@ def test_ledger_counts_via_footers(spark, store, monkeypatch):
     assert {r["tile_idx"]: (r["rows_in"], r["rows_out"]) for r in led} == {
         t: (rows_in.get(t, 0), rows_out.get(t, 0)) for t in touched
     }
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a Spark job group; the number of jobs it submitted."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# Spark jobs apply_diff itself submits for one local diff whose rows are
+# already computed: its checkpoint of the diff 1, the touched-tile lookup 2
+# (ids broadcast + collect), merge + write 3 (two shuffle stages and the
+# write). The ledger append and the per-tile counts are driver-side.
+DIFF_JOB_BUDGET = 6
+
+
+def test_apply_diff_job_budget(spark, store):
+    """Job creep in apply_diff fails here, not only in the benchmark: one
+    local diff stays within DIFF_JOB_BUDGET Spark jobs, and the ledger
+    append submits none (it is a driver-side parquet write)."""
+    st, assigned, _ = store
+    # computed up front: the fixture's tile assignment is the caller's cost
+    diff = _mk_diff(spark, assigned, "modify", version=1, n=3).localCheckpoint()
+    n = _jobs_in_group(spark, "test-apply-diff", lambda: st.apply_diff(diff, state=1))
+    assert 0 < n <= DIFF_JOB_BUDGET, n
+    n_ledger = _jobs_in_group(
+        spark, "test-ledger-append", lambda: st._append_ledger([0], 2, {0: 1}, {0: 1})
+    )
+    assert n_ledger == 0
+    assert st.resume_state() == 2
+
+
+def test_diff_derived_from_the_store(spark, store):
+    """A diff computed lazily from the store it is applied to is evaluated
+    once, before the write replaces the partitions it reads."""
+    st, _, _ = store
+    n0 = st.read().count()
+    diff = (
+        st.read().orderBy("id").limit(4)
+        .withColumn("wkt", F.concat(F.lit("MOD:"), F.col("wkt")))
+        .withColumn("changetype", F.lit("modify"))
+        .withColumn("version", F.lit(1))
+    )
+    assert st.apply_diff(diff, state=1)
+    assert st.read().count() == n0
+    assert st.read().filter(F.col("wkt").startswith("MOD:")).count() == 4
+
+
+def test_store_reader_matches_spark_inference(spark, store):
+    """The footer-read schema equals the one Spark's inference job finds,
+    and a read of some tile directories equals a partition-filtered read of
+    the whole store."""
+    from osmquadtree_bin_spark.footers import StoreReader, spark_schema_from_footers
+
+    st, _, _ = store
+    full = spark.read.parquet(st.data_path)
+    assert spark_schema_from_footers(st.data_path) == full.schema
+    tiles = sorted(r[0] for r in full.select("tile_idx").distinct().collect())[:2]
+    got = StoreReader(spark, st.data_path).read(tiles)
+    assert sorted(got.collect()) == sorted(full.filter(F.col("tile_idx").isin(tiles)).collect())
+
+
+def _spark_ledger_state(spark, st, state):
+    """A ledger state as the Spark append used to write it (part files and
+    _SUCCESS in the ledger directory)."""
+    from osmquadtree_bin_spark.streaming.update import LEDGER_SCHEMA
+
+    spark.createDataFrame([(state, 0, 5, 6, 0, True)], LEDGER_SCHEMA).write.mode(
+        "append"
+    ).parquet(st.ledger_path)
+
+
+def test_ledger_reads_spark_and_driver_written_states(spark, tmp_path):
+    """A ledger holding a state appended by Spark and a state written by the
+    driver reads as one table, and resume_state sees the newer one."""
+    import os
+
+    st = TiledStore(spark, str(tmp_path / "s"))
+    _spark_ledger_state(spark, st, 1)
+    assert any(f.startswith("part-") for f in os.listdir(st.ledger_path))
+    TiledStore(spark, st.root)._append_ledger([0, 3], 2, {0: 6, 3: 1}, {0: 7, 3: 0})
+
+    fresh = TiledStore(spark, st.root)
+    assert fresh.resume_state() == 2
+    rows = sorted((r["state"], r["tile_idx"], r["rows_out"]) for r in fresh.ledger().collect())
+    assert rows == [(1, 0, 6), (2, 0, 7), (2, 3, 0)]
+
+
+def test_ledger_ignores_crashed_append_temp_file(spark, tmp_path):
+    """An append that died before its rename leaves a temp file behind;
+    readers skip it, so its state does not count as applied."""
+    import os
+    import shutil
+
+    st = TiledStore(spark, str(tmp_path / "s"))
+    st._append_ledger([0], 1, {0: 1}, {0: 1})
+    TiledStore(spark, st.root)._append_ledger([0], 2, {0: 1}, {0: 1})
+    done = os.path.join(st.ledger_path, "state-000000000002.parquet")
+    shutil.move(done, os.path.join(st.ledger_path, ".state-000000000002.parquet.tmp"))
+
+    fresh = TiledStore(spark, st.root)
+    assert fresh.resume_state() == 1
+    assert {r["state"] for r in fresh.ledger().collect()} == {1}
+
+
+def test_resume_state_is_cached_per_instance(spark, tmp_path):
+    """The applied state is read from the ledger once per instance (one
+    writer per store): an instance does not see another instance's later
+    appends, a fresh instance on the same root does."""
+    st = TiledStore(spark, str(tmp_path / "s"))
+    assert st.resume_state() == 0
+    other = TiledStore(spark, st.root)
+    other._append_ledger([0], 1, {0: 1}, {0: 1})
+    assert other.resume_state() == 1
+    assert st.resume_state() == 0  # cached: the single-writer contract
+    assert TiledStore(spark, st.root).resume_state() == 1

@@ -213,6 +213,39 @@ def test_tile_rows_from_footers_fallbacks(tmp_path):
     assert _tile_rows_from_footers(str(tmp_path), max_files=0) is None
 
 
+@pytest.mark.parametrize("failure", ["arrow_type_error", "no_pyarrow"])
+@pytest.mark.parametrize("walk", ["tile_rows", "parquet_rows"])
+def test_footer_walk_failure_falls_back_with_warning(tmp_path, monkeypatch, caplog, walk, failure):
+    """Both footer walks keep their "None → fall back" contract for every
+    pyarrow failure, not just ArrowInvalid: an ArrowTypeError from a footer
+    read and a missing pyarrow both return None and log a warning instead
+    of escaping to the caller."""
+    import logging
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from jobs.prepare_job import _tile_rows_from_footers
+    from osmquadtree_bin_spark.footers import parquet_rows
+
+    d = tmp_path / "tile_idx=3"
+    d.mkdir()
+    pq.write_table(pa.table({"id": [1, 2, 3]}), str(d / "f.parquet"))
+    if failure == "arrow_type_error":
+        def boom(*_a, **_k):
+            raise pa.ArrowTypeError("unexpected footer type")
+
+        monkeypatch.setattr(pq, "read_metadata", boom)
+        want = "ArrowTypeError"
+    else:
+        monkeypatch.setitem(sys.modules, "pyarrow.parquet", None)
+        want = "ModuleNotFoundError"  # an ImportError
+    with caplog.at_level(logging.WARNING):
+        got = _tile_rows_from_footers(str(tmp_path)) if walk == "tile_rows" else parquet_rows(str(d))
+    assert got is None
+    assert want in caplog.text
+
+
 def test_lineage_overwrite_clears_stale_part_files(spark, tmp_path):
     """Re-running prepare into the SAME work_dir with a different layout
     flag (distributed-count audit first, footer fast path second) must

@@ -178,6 +178,62 @@ def main() -> None:
             mode.upper() == "STATIC" and committed and truncated,
         )
 
+    # --- apply_diff: the merge reads only the touched tiles; no Python -----
+    # Spies record every frame apply_diff runs (collect, localCheckpoint,
+    # the write) and every Python-side frame or RDD it builds; the diff
+    # itself is an Arrow-built local frame, as a caller makes it.
+    with tempfile.TemporaryDirectory() as td:
+        st = TiledStore(spark, os.path.join(td, "store"))
+        st.write_initial(assigned.select("id", "qt", "tile_idx"))
+        changed = st.read().limit(2).toPandas().assign(changetype="modify", version=1)
+        diff = spark.createDataFrame(changed)
+        ran: list = []
+        py_built: list = []
+        spies = [
+            (type(diff), "collect", lambda df: df),
+            (type(diff), "localCheckpoint", lambda df: df),
+            (type(diff.write), "parquet", lambda w: w._df),
+            (type(spark), "createDataFrame", None),
+            (type(spark.sparkContext), "parallelize", None),
+        ]
+        saved = [(cls, name, getattr(cls, name)) for cls, name, _ in spies]
+
+        def spy(real, frame):
+            def wrapped(self, *a, **k):
+                if frame is None:
+                    py_built.append(real.__name__)
+                else:
+                    ran.append(frame(self))
+                return real(self, *a, **k)
+
+            return wrapped
+
+        for (cls, name, frame), (_, _, real) in zip(spies, saved):
+            setattr(cls, name, spy(real, frame))
+        try:
+            touched = st.apply_diff(diff, state=1)
+        finally:
+            for cls, name, real in saved:
+                setattr(cls, name, real)
+        written = ran[-1]
+        plans = [executed(df) for df in ran]
+        base_tiles = sorted(
+            {int(f.split("tile_idx=")[1].split("/")[0]) for f in written.inputFiles()}
+        )
+        python = [p for p in plans if "EvalPython" in p or "InPandas" in p or "InArrow" in p]
+        check(
+            "apply_diff merge base scan lists only the touched tile directories",
+            f"merge base files in tiles {base_tiles} of touched {touched}; "
+            f"store has {len(groups)} tiles",
+            bool(base_tiles) and set(base_tiles) <= set(touched),
+        )
+        check(
+            "apply_diff path has no Python (plans JVM-only, ledger append without Spark)",
+            f"{len(plans)} plans run, EvalPython/InPandas/InArrow in {len(python)}; "
+            f"Python-built frames/RDDs: {len(py_built)}",
+            bool(plans) and not python and not py_built,
+        )
+
     # --- q14 morton: JVM only ---------------------------------------------
     import importlib.util
 
