@@ -33,8 +33,10 @@ def main() -> None:
     import pandas as pd
     from pyspark.sql import SparkSession
 
+    from osmquadtree_bin_spark.operators.pip_join import REGIONS_SCHEMA
     from osmquadtree_bin_spark.plans.store import TileQueryEngine
     from osmquadtree_bin_spark.quadtree import COORD_SCALE
+    from osmquadtree_bin_spark.session import local_frame
     from osmquadtree_bin_spark.sources import poly_to_regions, to_geojson
 
     spark = SparkSession.builder.appName("oqt-extract").getOrCreate()
@@ -55,12 +57,10 @@ def main() -> None:
 
     if args.bbox:
         mnx, mny, mxx, mxy = (float(v) for v in args.bbox.split(","))
-        regions = spark.createDataFrame(
-            [("extract", "bbox", int(mnx * COORD_SCALE), int(mny * COORD_SCALE),
-              int(mxx * COORD_SCALE), int(mxy * COORD_SCALE), None, None)],
-            "region_id string, kind string, minx long, miny long, maxx long, "
-            "maxy long, lons array<long>, lats array<long>",
-        )
+        regions = local_frame(spark, REGIONS_SCHEMA, [
+            ("extract", "bbox", int(mnx * COORD_SCALE), int(mny * COORD_SCALE),
+             int(mxx * COORD_SCALE), int(mxy * COORD_SCALE), None, None)
+        ])
     elif args.poly:
         regions = poly_to_regions(spark, args.poly)
     else:

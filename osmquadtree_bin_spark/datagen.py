@@ -212,11 +212,10 @@ def region_rows(n_bbox: int = 8, n_poly: int = 4, seed: int = 43) -> list[tuple]
 def gen_regions(spark, n_bbox: int = 8, n_poly: int = 4, seed: int = 43):
     """F3: bbox + polygon regions; one region pinned over a hot cluster (skew),
     one over empty ocean (matches nothing). Rows from :func:`region_rows`."""
-    return spark.createDataFrame(
-        region_rows(n_bbox, n_poly, seed),
-        "region_id string, kind string, minx long, miny long, maxx long, maxy long, "
-        "lons array<long>, lats array<long>",
-    )
+    from .operators.pip_join import REGIONS_SCHEMA
+    from .session import local_frame
+
+    return local_frame(spark, REGIONS_SCHEMA, region_rows(n_bbox, n_poly, seed))
 
 
 def gen_elements(spark, n_nodes: int = 2000, n_ways: int = 300, n_rels: int = 60, seed: int = 45):

@@ -19,6 +19,8 @@ import glob
 import logging
 import os
 
+from .session import local_frame
+
 log = logging.getLogger(__name__)
 
 
@@ -178,7 +180,8 @@ class StoreReader:
         ``tiles`` that exist (``basePath`` keeps ``tile_idx`` a column; the
         other directories are not listed). When none is found locally — no
         such tile yet, or a store the local fs cannot see — the whole store
-        is read and pruned by a partition filter instead."""
+        is read and pruned by a partition filter instead. An empty ``tiles``
+        is an empty frame of the schema: no listing, no job."""
         if self._schema is None:
             self._schema = (
                 spark_schema_from_footers(self.path)
@@ -187,6 +190,8 @@ class StoreReader:
         reader = self.spark.read.schema(self._schema)
         if tiles is None:
             return reader.parquet(self.path)
+        if not tiles:
+            return local_frame(self.spark, self._schema)
         dirs = [
             d
             for t in tiles

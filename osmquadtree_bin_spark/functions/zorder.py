@@ -81,23 +81,32 @@ Z_ORDER_TABLE = {
 LAYER_STEP = 1000  # a layer=n tag shifts z_order by n*1000 (carto convention)
 
 
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def z_order(tags: str = "tags") -> Column:
     """Priority of the first matching (tagkey, value) row — one JVM map
-    lookup per tag key, no per-value CASE ladder."""
-    prio_map = F.create_map(
-        *[F.lit(x) for kv in Z_ORDER_TABLE.items() for x in kv]
-    )
-    lookups = [
-        F.element_at(
-            prio_map,
-            F.concat(F.lit(f"{key}_"), F.element_at(F.col(tags), key)),
-        )
+    lookup per tag key, no per-value CASE ladder. One SQL expression, parsed
+    in the JVM: building the 47-pair map from ``F.lit`` columns cost one
+    py4j round trip per literal."""
+    t = f"`{tags}`"
+    prio_map = "map(" + ", ".join(
+        f"{sql_str(k)}, {v}" for k, v in Z_ORDER_TABLE.items()
+    ) + ")"
+    lookups = ", ".join(
+        f"element_at({prio_map}, concat({sql_str(key + '_')}, "
+        f"element_at({t}, {sql_str(key)})))"
         for key in ("highway", "railway", "aeroway", "aerialway")
-    ]
-    base = F.coalesce(*lookups, F.lit(0))
-    layer = F.element_at(F.col(tags), "layer")
-    layer_n = F.when(layer.rlike(r"^-?[0-9]+$"), layer.cast("long")).otherwise(0)
-    return (base + layer_n * LAYER_STEP).cast("long")
+    )
+    layer = f"element_at({t}, 'layer')"
+    layer_n = (
+        f"CASE WHEN {layer} RLIKE '^-?[0-9]+$' THEN CAST({layer} AS BIGINT) ELSE 0 END"
+    )
+    return F.expr(
+        f"CAST(coalesce({lookups}, 0) + ({layer_n}) * {LAYER_STEP} AS BIGINT)"
+    )
 
 
 @pandas_udf(DoubleType())

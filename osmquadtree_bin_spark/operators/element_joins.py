@@ -19,6 +19,7 @@ reference's unroll.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.qtsql import with_qt_sql
@@ -277,8 +278,6 @@ def rel_wkt(relations: DataFrame, ways: DataFrame, nodes: DataFrame) -> DataFram
 
     Returns (id, wkt, n_outer, n_inner, n_dropped) for every relation that
     has at least one outer/inner way member; wkt NULL when no ring closes."""
-    import pandas as pd
-
     m = (
         relations.select("id", F.explode("members").alias("m"))
         .filter((F.col("m.mtype") == 1) & F.col("m.role").isin("outer", "inner"))
@@ -310,7 +309,7 @@ def rel_wkt(relations: DataFrame, ways: DataFrame, nodes: DataFrame) -> DataFram
 
     schema = "id long, wkt string, n_outer int, n_inner int, n_dropped int"
 
-    def _assemble(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def _assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         members = []
         for role, wid, p in zip(pdf["role"], pdf["way_id"], pdf["pts"]):
             if p is None or (isinstance(p, float) and pd.isna(p)):

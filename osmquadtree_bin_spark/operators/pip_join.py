@@ -25,9 +25,17 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
 from .. import quadtree as qtk
+
+# The regions frame pip_join reads: bbox regions fill minx..maxy, polygon
+# regions fill lons/lats (one ring per row; .poly rings add ``hole``).
+REGIONS_SCHEMA = StructType(
+    [StructField("region_id", StringType()), StructField("kind", StringType())]
+    + [StructField(c, LongType()) for c in ("minx", "miny", "maxx", "maxy")]
+    + [StructField(c, ArrayType(LongType())) for c in ("lons", "lats")]
+)
 
 
 # ------------------------------------------------------------- tile pruning
@@ -185,7 +193,13 @@ def pip_join(elements: DataFrame, regions: DataFrame) -> DataFrame:
     ``kind='polygon'`` the element matches when its bbox center is inside the
     ring (point-in-poly, ``MakeLocTestPolygon``).
     """
-    regs = regions.collect()  # small side — stays broadcast
+    return _pip_join_rows(elements, regions.collect())  # small side — broadcast
+
+
+def _pip_join_rows(elements: DataFrame, regs: list) -> DataFrame:
+    """The body of :func:`pip_join` over already-collected region rows, for a
+    caller that read them itself (``TileQueryEngine.extract`` prunes tiles
+    with the same rows)."""
     bbox_rows = [r for r in regs if r["kind"] == "bbox"]
     poly_rows = [r for r in regs if r["kind"] == "polygon"]
 

@@ -7,12 +7,14 @@ a pruned scan of the packed tile store (``pds.Filter``/``FilterTile``,
 (:600-602).
 
 Spark shape: the store is tile-partitioned parquet (Iceberg in production).
-``query_bbox`` computes the pruned tile list on the driver (a numpy pass over
-the group keys — the P1 generator), filters with ``tile_idx IN (...)`` so the
-scan reads ONLY those hive partitions (verify with
-``.explain`` → PartitionFilters), applies the exact bbox predicate, registers
-the planet_osm views over the slice, and hands back a dict of DataFrames —
-on which any corpus query runs via ``spark.sql``.
+``scan_bbox`` computes the pruned tile list on the driver (a numpy pass over
+the group keys — the P1 generator) and lists ONLY those ``tile_idx=N``
+directories (``StoreReader.read(tiles)``), so building a request's frame
+submits no Spark job and its scan reads only the pruned tiles. The
+``tile_idx IN (...)`` filter on top keeps the plan's PartitionFilters (and
+prunes the whole-store fallback of a store the local fs cannot see). Then
+the exact bbox predicate; ``tables_for_bbox`` registers the planet_osm views
+over the slice, on which any corpus query runs via ``spark.sql``.
 """
 
 from __future__ import annotations
@@ -42,6 +44,11 @@ class TileQueryEngine:
         sel = self.groups[self.groups["tile_qt"].isin(hit_keys)]
         return [int(t) for t in sel["tile_idx"]]
 
+    def _read_tiles(self, tiles: list[int]) -> DataFrame:
+        """Only the ``tiles`` directories of the store; the partition filter
+        keeps the plan's PartitionFilters."""
+        return self._store.read(tiles).filter(F.col("tile_idx").isin(tiles))
+
     def scan_bbox(
         self, minx: int, miny: int, maxx: int, maxy: int, columns: list[str] | None = None
     ) -> DataFrame:
@@ -50,8 +57,7 @@ class TileQueryEngine:
             raise ValueError("bbox too large (reference guard, geometry.go:600-602)")
         tiles = self.pruned_tiles(minx, miny, maxx, maxy)
         df = (
-            self._store.read()
-            .filter(F.col("tile_idx").isin(tiles))  # → hive partition pruning
+            self._read_tiles(tiles)
             .filter(
                 (F.col("minx") <= maxx) & (F.col("maxx") >= minx)
                 & (F.col("miny") <= maxy) & (F.col("maxy") >= miny)
@@ -82,8 +88,7 @@ class TileQueryEngine:
         minx, miny, maxx, maxy = (int(v[0]) for v in qtk.bounds(np.array([req]), 0.05))
         tiles = self.pruned_tiles(minx, miny, maxx, maxy)
         return (
-            self._store.read()
-            .filter(F.col("tile_idx").isin(tiles))
+            self._read_tiles(tiles)
             .filter((F.col("qt").bitwiseAND(F.lit(31))) >= tz)
             .filter(qt_round_expr("qt", tz) == req)
         )
@@ -95,21 +100,21 @@ class TileQueryEngine:
     ) -> DataFrame:
         """The osmquadtree-filter extract (§3, ``osmquadtree-filter.go:122-225``):
         PIP-match elements against regions, two-pass id-set trim (P4), global
-        (type,id) sort (O2)."""
-        from ..operators.pip_join import idset_trim, pip_join
+        (type,id) sort (O2). ``regions`` is collected once, for the tile
+        pruning and the join."""
+        from ..operators.pip_join import _pip_join_rows, idset_trim
 
         # prune tiles PER REGION (a union bbox over scattered regions would
         # cover the world and defeat pruning — and trip the size guard)
+        regs = regions.collect()
         tiles: set[int] = set()
-        for r in regions.collect():
+        for r in regs:
             if r["minx"] is not None:
                 bb = (r["minx"], r["miny"], r["maxx"], r["maxy"])
             else:
                 bb = (min(r["lons"]), min(r["lats"]), max(r["lons"]), max(r["lats"]))
             tiles.update(self.pruned_tiles(*(int(v) for v in bb)))
-        elements = self._store.read().filter(
-            F.col("tile_idx").isin(sorted(tiles))
-        )
-        matched = pip_join(elements, regions)
+        elements = self._read_tiles(sorted(tiles))
+        matched = _pip_join_rows(elements, regs)
         trimmed = idset_trim(elements, matched)
         return trimmed.orderBy("id") if sort_by_id else trimmed

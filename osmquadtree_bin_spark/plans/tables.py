@@ -19,7 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions.dialect import translate
-from ..functions.zorder import way_area_merc, z_order
+from ..functions.zorder import sql_str, way_area_merc, z_order
 
 # Public style-vocabulary fixture (jharris2268/osmquadtree-bin ships it as
 # extrastyle.json). A copy lives in tests/fixtures/ so the repo is
@@ -51,33 +51,36 @@ def load_style(path: str = STYLE_PATH) -> list[dict]:
         return json.load(f)
 
 
-def _osm_id():
-    """Reference id unpack (``osmquadtree-postgis.go:279-284``): low 40 bits,
-    negative for relations (type bits >= 59 == 2)."""
-    oid = F.col("id").bitwiseAND(F.lit((1 << 40) - 1))
-    return F.when(F.shiftrightunsigned(F.col("id"), 59) == 2, -oid).otherwise(oid)
+# The column expressions below are SQL strings: each view is built per
+# request over the bbox slice, and a string parses in the JVM where a
+# Column tree costs a py4j round trip per node.
 
+# Reference id unpack (``osmquadtree-postgis.go:279-284``): low 40 bits,
+# negative for relations (type bits >= 59 == 2).
+_OSM_ID = (
+    f"CASE WHEN shiftrightunsigned(id, 59) = 2 THEN -(id & {(1 << 40) - 1}) "
+    f"ELSE id & {(1 << 40) - 1} END"
+)
+_AREA_NO = "element_at(tags, 'area') IN ('no', '0', 'false')"
 
 _PH_DEPTH = 12  # grid depth cap for the parent_highway cell join
 
 
-def _cell_key(a, x, y):
-    """Pack (depth, cell_x, cell_y) into one join key."""
-    return (
-        F.shiftleft(a.cast("long"), 40)
-        .bitwiseOR(F.shiftleft(x.cast("long"), 20))
-        .bitwiseOR(y.cast("long"))
-    )
-
-
-def _grid_xy(lon_col: str, lat_col: str):
+def _grid_xy(lon_col: str, lat_col: str) -> tuple[str, str]:
     """Fixed-point lon/lat → depth-_PH_DEPTH integer grid coords (equirect
     grid is fine here: the key only buckets, the exact bbox test follows)."""
     n = 1 << _PH_DEPTH
-    x = F.floor((F.col(lon_col) + 1_800_000_000) / F.lit(3_600_000_000) * n)
-    y = F.floor((F.col(lat_col) + 900_000_000) / F.lit(1_800_000_000) * n)
-    clamp = lambda c: F.greatest(F.least(c, F.lit(n - 1)), F.lit(0))  # noqa: E731
-    return clamp(x).cast("long"), clamp(y).cast("long")
+
+    def cell(c: str, offset: int, extent: int) -> str:
+        return (
+            f"CAST(greatest(least(floor(({c} + {offset}) / {extent} * {n}), "
+            f"{n - 1}), 0) AS BIGINT)"
+        )
+
+    return (
+        cell(lon_col, 1_800_000_000, 3_600_000_000),
+        cell(lat_col, 900_000_000, 1_800_000_000),
+    )
 
 
 def _bitlen(col: str, maxbits: int) -> str:
@@ -104,54 +107,41 @@ def _parent_highway(pts: DataFrame, hwy_lines: DataFrame) -> DataFrame:
     x0, y0 = _grid_xy("lminx", "lminy")
     x1, y1 = _grid_xy("lmaxx", "lmaxy")
     lines_k = (
-        hwy_lines.withColumn("_x0", x0).withColumn("_y0", y0)
-        .withColumn("_x1", x1).withColumn("_y1", y1)
-        # common-prefix depth per axis -> deepest depth with <= 2 cells/axis
-        .withColumn(
-            "_d",
-            F.expr(
-                f"least({D} - ({_bitlen('(_x0 ^ _x1)', D)}) + 1, "
-                f"least({D} - ({_bitlen('(_y0 ^ _y1)', D)}) + 1, {D}))"
-            ),
+        hwy_lines.selectExpr(
+            "*", f"{x0} AS _x0", f"{y0} AS _y0", f"{x1} AS _x1", f"{y1} AS _y1"
         )
-        .withColumn(
-            "_ck",
-            F.explode(
-                F.expr(
-                    f"array_distinct(array("
-                    f"shiftleft(CAST(_d AS BIGINT), 40) | shiftleft(shiftright(_x0, {D} - _d), 20) | shiftright(_y0, {D} - _d),"
-                    f"shiftleft(CAST(_d AS BIGINT), 40) | shiftleft(shiftright(_x1, {D} - _d), 20) | shiftright(_y0, {D} - _d),"
-                    f"shiftleft(CAST(_d AS BIGINT), 40) | shiftleft(shiftright(_x0, {D} - _d), 20) | shiftright(_y1, {D} - _d),"
-                    f"shiftleft(CAST(_d AS BIGINT), 40) | shiftleft(shiftright(_x1, {D} - _d), 20) | shiftright(_y1, {D} - _d)))"
-                )
-            ),
+        # common-prefix depth per axis -> deepest depth with <= 2 cells/axis
+        .selectExpr(
+            "*",
+            f"least({D} - ({_bitlen('(_x0 ^ _x1)', D)}) + 1, "
+            f"least({D} - ({_bitlen('(_y0 ^ _y1)', D)}) + 1, {D})) AS _d",
+        )
+        .selectExpr(
+            "*",
+            f"explode(array_distinct(array("
+            f"shiftleft(CAST(_d AS BIGINT), 40) | shiftleft(shiftright(_x0, {D} - _d), 20) | shiftright(_y0, {D} - _d),"
+            f"shiftleft(CAST(_d AS BIGINT), 40) | shiftleft(shiftright(_x1, {D} - _d), 20) | shiftright(_y0, {D} - _d),"
+            f"shiftleft(CAST(_d AS BIGINT), 40) | shiftleft(shiftright(_x0, {D} - _d), 20) | shiftright(_y1, {D} - _d),"
+            f"shiftleft(CAST(_d AS BIGINT), 40) | shiftleft(shiftright(_x1, {D} - _d), 20) | shiftright(_y1, {D} - _d)))) AS _ck",
         )
         .drop("_x0", "_y0", "_x1", "_y1", "_d")
     )
     px, py = _grid_xy("minx", "miny")
     pts_k = (
-        pts.select("id", "minx", "miny")
-        .withColumn("_px", px).withColumn("_py", py)
-        .withColumn(
-            "_ck",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {D}), a -> "
-                    f"shiftleft(CAST(a AS BIGINT), 40) | "
-                    f"shiftleft(shiftright(_px, {D} - a), 20) | shiftright(_py, {D} - a))"
-                )
-            ),
+        pts.selectExpr("id", "minx", "miny", f"{px} AS _px", f"{py} AS _py")
+        .selectExpr(
+            "*",
+            f"explode(transform(sequence(0, {D}), a -> "
+            f"shiftleft(CAST(a AS BIGINT), 40) | "
+            f"shiftleft(shiftright(_px, {D} - a), 20) | shiftright(_py, {D} - a))) AS _ck",
         )
         .drop("_px", "_py")
     )
     return (
         pts_k.join(lines_k, "_ck")
-        .filter(
-            (F.col("minx") >= F.col("lminx")) & (F.col("minx") <= F.col("lmaxx"))
-            & (F.col("miny") >= F.col("lminy")) & (F.col("miny") <= F.col("lmaxy"))
-        )
+        .filter("minx >= lminx AND minx <= lmaxx AND miny >= lminy AND miny <= lmaxy")
         .groupBy("id")
-        .agg(F.min_by("l_highway", "l_osm_id").alias("parent_highway"))
+        .agg(F.expr("min_by(l_highway, l_osm_id) AS parent_highway"))
     )
 
 
@@ -182,14 +172,17 @@ def register_tables(
     node_tags = [s["Tag"] for s in style if s.get("IsNode") and s["Type"] == "text"]
     way_tags = [s["Tag"] for s in style if s.get("IsWay") and s["Type"] == "text"]
 
-    def proj(tags: list[str]):
-        return [F.element_at(F.col("tags"), t).alias(t) for t in sorted(set(tags))]
+    def proj(tags: list[str]) -> list[str]:
+        # SQL strings for one selectExpr: ~200 style columns parse in the JVM
+        # instead of costing a few py4j round trips each
+        return [
+            f"element_at(tags, {sql_str(t)}) AS `{t.replace('`', '``')}`"
+            for t in sorted(set(tags))
+        ]
 
-    base = elements.withColumn("osm_id", _osm_id()).withColumn(
-        "quadtree", F.col("qt")
-    ).withColumn("way", F.col("wkt"))
-
-    area_no = F.element_at(F.col("tags"), "area").isin("no", "0", "false")
+    base = elements.withColumns(
+        {"osm_id": F.expr(_OSM_ID), "quadtree": F.col("qt"), "way": F.col("wkt")}
+    )
 
     # A6 calc_parent (extrastyle.json:73): a point inherits the highway value
     # of a containing way — doc-model analogue: highway of the smallest-id
@@ -199,41 +192,33 @@ def register_tables(
     # over planet_osm_point even when the column is never projected (Catalyst
     # cannot eliminate an outer join without unique-key metadata), so callers
     # whose query set never touches the column can skip it outright.
-    pts = base.filter(F.col("geom_type") == 0)
+    pts = base.filter("geom_type = 0")
     if parent_highway:
-        hwy_lines = (
-            base.filter(
-                (F.col("geom_type") == 1)
-                & F.element_at(F.col("tags"), "highway").isNotNull()
-            )
-            .select(
-                F.col("minx").alias("lminx"), F.col("miny").alias("lminy"),
-                F.col("maxx").alias("lmaxx"), F.col("maxy").alias("lmaxy"),
-                F.col("osm_id").alias("l_osm_id"),
-                F.element_at(F.col("tags"), "highway").alias("l_highway"),
-            )
+        hwy_lines = base.filter(
+            "geom_type = 1 AND element_at(tags, 'highway') IS NOT NULL"
+        ).selectExpr(
+            "minx AS lminx", "miny AS lminy", "maxx AS lmaxx", "maxy AS lmaxy",
+            "osm_id AS l_osm_id", "element_at(tags, 'highway') AS l_highway",
         )
         parent = _parent_highway(pts, hwy_lines)
-        point = pts.join(parent, "id", "left").select(
-            "osm_id", "quadtree", "way", F.col("parent_highway"), *proj(node_tags)
+        point = pts.join(parent, "id", "left").selectExpr(
+            "osm_id", "quadtree", "way", "parent_highway", *proj(node_tags)
         )
     else:
-        point = pts.select(
+        point = pts.selectExpr(
             "osm_id", "quadtree", "way",
-            F.lit(None).cast("string").alias("parent_highway"), *proj(node_tags)
+            "CAST(NULL AS STRING) AS parent_highway", *proj(node_tags)
         )
     line = (
-        base.filter(
-            (F.col("geom_type") == 1) | ((F.col("geom_type") == 2) & area_no)
-        )
+        base.filter(f"geom_type = 1 OR (geom_type = 2 AND {_AREA_NO})")
         .withColumn("z_order", z_order())
-        .select("osm_id", "quadtree", "way", "z_order", *proj(way_tags))
+        .selectExpr("osm_id", "quadtree", "way", "z_order", *proj(way_tags))
     )
     polygon = (
-        base.filter((F.col("geom_type") == 2) & ~F.coalesce(area_no, F.lit(False)))
+        base.filter(f"geom_type = 2 AND NOT coalesce({_AREA_NO}, false)")
         .withColumn("z_order", z_order())
         .withColumn("way_area", way_area_merc(F.col("wkt")))
-        .select("osm_id", "quadtree", "way", "z_order", "way_area", *proj(way_tags))
+        .selectExpr("osm_id", "quadtree", "way", "z_order", "way_area", *proj(way_tags))
     )
     if relations is not None:
         from ..operators.element_joins import (
@@ -256,12 +241,13 @@ def register_tables(
             mp.join(rel_tags, "id", "left")
             .join(rq.withColumnRenamed("qt", "quadtree"), "id", "left")
             .withColumn("z_order", z_order())
-            .select(
-                (-F.col("id")).alias("osm_id"),  # relation rows: negative ids
-                F.coalesce("quadtree", F.lit(0)).alias("quadtree"),
-                F.col("wkt").alias("way"),
+            .withColumn("way_area", way_area_merc(F.col("wkt")))
+            .selectExpr(
+                "-id AS osm_id",  # relation rows: negative ids
+                "coalesce(quadtree, 0) AS quadtree",
+                "wkt AS way",
                 "z_order",
-                way_area_merc(F.col("wkt")).alias("way_area"),
+                "way_area",
                 *proj(way_tags),
             )
         )

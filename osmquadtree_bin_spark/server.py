@@ -4,7 +4,10 @@ server (``/root/reference/osmquadtree-geometry.go:384-550`` route handlers,
 ``static.go``/``index.html``), re-expressed as a thin stdlib HTTP layer over
 ``TileQueryEngine``. Serving is a driver-edge concern: every endpoint is a
 bounded collect of an already-pruned Spark plan (tile partition pruning +
-exact predicates), never a bulk path.
+exact predicates), never a bulk path. A request's cost scales with the tiles
+its bbox prunes to, not with the store: building its frame lists only those
+tile directories and submits no Spark job, and /extract's region frame is a
+driver-local Arrow table (no Python-worker tasks).
 
 Routes (GET):
     /                           embedded Leaflet viewer (static HTML)
@@ -36,6 +39,8 @@ from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
+from .operators.pip_join import REGIONS_SCHEMA
+from .session import local_frame
 from .sources import to_geojson
 
 BBOX_CACHE_SIZE = 1  # osmquadtree-geometry.go:235-243
@@ -170,10 +175,9 @@ class TileServer:
         )
 
     def _extract_df(self, minx: int, miny: int, maxx: int, maxy: int):
-        regions = self.engine.spark.createDataFrame(
+        regions = local_frame(
+            self.engine.spark, REGIONS_SCHEMA,
             [("req", "bbox", minx, miny, maxx, maxy, None, None)],
-            "region_id string, kind string, minx long, miny long, "
-            "maxx long, maxy long, lons array<long>, lats array<long>",
         )
         return self.engine.extract(regions)
 

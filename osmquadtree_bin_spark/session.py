@@ -12,7 +12,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -66,3 +67,18 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, schema: StructType, rows=()) -> DataFrame:
+    """A small driver-side table (tuples in ``schema``'s field order) as a
+    Spark frame built from Arrow. Spark keeps it as a ``LocalRelation``:
+    collecting or scanning it runs no job and no Python worker, where
+    ``createDataFrame`` of Python tuples is a pickled Python RDD whose every
+    read spawns Python-worker tasks."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)

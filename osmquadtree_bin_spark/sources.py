@@ -17,8 +17,11 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import BooleanType, StructField, StructType
 
+from .operators.pip_join import REGIONS_SCHEMA
 from .quadtree import COORD_SCALE
+from .session import local_frame
 
 
 # ------------------------------------------------------------------ S13 .poly
@@ -55,11 +58,8 @@ def poly_to_regions(spark, path: str) -> DataFrame:
         (poly["name"], "polygon", None, None, None, None, lons, lats, hole)
         for lons, lats, hole in poly["rings"]
     ]
-    return spark.createDataFrame(
-        rows,
-        "region_id string, kind string, minx long, miny long, maxx long, maxy long, "
-        "lons array<long>, lats array<long>, hole boolean",
-    )
+    schema = StructType(REGIONS_SCHEMA.fields + [StructField("hole", BooleanType())])
+    return local_frame(spark, schema, rows)
 
 
 def write_poly(path: str, name: str, rings: list[tuple[list[int], list[int], bool]]):

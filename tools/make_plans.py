@@ -147,6 +147,34 @@ def main() -> None:
             "LessThanOrEqual(minx" in p,
         )
 
+        # a request's scan lists only its pruned tile directories
+        from osmquadtree_bin_spark import quadtree as qtk
+
+        def tiles_read(df) -> list[int]:
+            return sorted(
+                {int(f.split("tile_idx=")[1].split("/")[0]) for f in df.inputFiles()}
+            )
+
+        key = qtk.point_quadtree(np.array([int(-0.13e7)]), np.array([int(51.5e7)]), 10)
+        tx, ty, tz = (int(v[0]) for v in qtk.to_tuple(key))
+        frames = {
+            "scan_bbox": (sb, eng.pruned_tiles(-4_500_000, 512_000_000, 2_500_000, 518_000_000)),
+            "rawtile": (
+                eng.rawtile(tx, ty, tz),
+                eng.pruned_tiles(*(int(v[0]) for v in qtk.bounds(key, 0.05))),
+            ),
+        }
+        read = {name: tiles_read(df) for name, (df, _) in frames.items()}
+        check(
+            "tiled-store request scans list only the pruned tile directories",
+            "; ".join(
+                f"{name} files in tiles {read[name]} of pruned {pruned}"
+                for name, (_, pruned) in frames.items()
+            )
+            + f"; store has {len(groups)} tiles",
+            all(read[n] and set(read[n]) <= set(pr) for n, (_, pr) in frames.items()),
+        )
+
     # --- resume safety: apply_diff must not flip session overwrite semantics
     # (round-4 verdict bug: a session-wide partitionOverwriteMode=dynamic
     # leak made later partitioned overwrites skip _SUCCESS and keep stale
